@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, BinaryExpression, TernaryExpression}
@@ -51,7 +52,15 @@ object LongArrayMap {
     * and as 4-8x run-to-run swings on the linkage family. A handful of
     * strong refs (the two maps a pipeline is actively using) pins the
     * value for the query's lifetime; the small FIFO bound keeps a long
-    * many-query session from accumulating every historical map. */
+    * many-query session from accumulating every historical map.
+    *
+    * SCOPE: one SparkContext. Broadcast ids restart at 0 in every new
+    * context, so an id alone names a different map once the context that
+    * filled the cache has stopped and another has started in the same
+    * JVM (one forked test JVM running suite after suite). The cache
+    * remembers the [[org.apache.spark.SparkEnv]] that filled it — weakly,
+    * so a stopped context's env is not pinned — and empties itself the
+    * first time it is read under a different one. */
   private val ValueCacheMax = 8
   private val valueCache =
     new java.util.LinkedHashMap[Long, LongArrayMap](16, 0.75f, false) {
@@ -59,9 +68,15 @@ object LongArrayMap {
           e: java.util.Map.Entry[Long, LongArrayMap]): Boolean =
         size() > ValueCacheMax
     }
+  private var valueCacheEnv = new java.lang.ref.WeakReference[SparkEnv](null)
 
   def cachedValue(bc: Broadcast[LongArrayMap]): LongArrayMap =
     valueCache.synchronized {
+      val env = SparkEnv.get
+      if (valueCacheEnv.get ne env) {
+        valueCache.clear()
+        valueCacheEnv = new java.lang.ref.WeakReference(env)
+      }
       val got = valueCache.get(bc.id)
       if (got != null) got
       else { val v = bc.value; valueCache.put(bc.id, v); v }

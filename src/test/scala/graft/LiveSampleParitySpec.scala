@@ -3,6 +3,7 @@ package graft
 import graft.operators.{OddsCollect, OddsPipeline}
 import graft.sources.Sources
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
 /** Parity against the reference's OWN recorded output: the live collection
   * sample `data/early_odds_1390826_20250818_190818.json` ships the raw
@@ -16,8 +17,15 @@ class LiveSampleParitySpec extends SparkSpec {
 
   val sample =
     "/root/reference/data/early_odds_1390826_20250818_190818.json"
+  val jobsPath = "/root/reference/jobs.json"
+
+  // the recorded files are not vendored into the repo: cancel (not fail)
+  // where they are absent, run unchanged wherever they exist
+  private def assumeFile(path: String): Unit =
+    assume(Files.exists(Paths.get(path)), s"recorded file $path not present")
 
   test("S1/S3: the live payload reads through the declared schema") {
+    assumeFile(sample)
     val p = Sources.readPayloads(spark, sample)
     val row = p.head
     assert(row.getAs[Long]("fixture_id") === 1390826L)
@@ -28,6 +36,7 @@ class LiveSampleParitySpec extends SparkSpec {
   }
 
   test("N2: flattenOdds reproduces the sample's h2h prices per bookmaker") {
+    assumeFile(sample)
     val p = Sources.readPayloads(spark, sample)
     val parsed = p.select(col("fixture_id"),
       lit(null).cast("timestamp").as("collected_at"),
@@ -48,11 +57,11 @@ class LiveSampleParitySpec extends SparkSpec {
   }
 
   test("S3/ST2: deriveJobs reproduces the reference's live 56-job queue") {
+    assumeFile(jobsPath)
     import graft.operators.{Fixture, JobQueue}
     implicit val sp: org.apache.spark.sql.SparkSession = spark
-    val path = "/root/reference/jobs.json"
     // S3: the declared schema reads the live file
-    val jobs = Sources.readJobs(spark, path)
+    val jobs = Sources.readJobs(spark, jobsPath)
     assert(jobs.count() === 56) // 14 fixtures x 4 phases (BASELINE.md)
     assert(jobs.filter(col("scheduled_for").isNull).count() === 0)
     // ST2: re-derive the queue from the file's own game_info fixtures —
@@ -67,7 +76,7 @@ class LiveSampleParitySpec extends SparkSpec {
           org.apache.spark.sql.types.StructField("priority",
             org.apache.spark.sql.types.StringType))))))
     val fixtures = spark.read.schema(giSchema)
-      .option("multiLine", true).json(path)
+      .option("multiLine", true).json(jobsPath)
       .select(col("game_info.fixture_id").as("fixture_id"),
         to_timestamp(col("game_info.kickoff_utc")).as("kickoff_utc"),
         col("game_info.priority").as("priority"))
@@ -87,6 +96,7 @@ class LiveSampleParitySpec extends SparkSpec {
   }
 
   test("F11: enhanceWithMapping reproduces the reference's recorded cascade output") {
+    assumeFile(sample)
     val p = Sources.readPayloads(spark, sample)
       .select(col("fixture_id"), col("game_info"),
         col("data.odds_early").as("event"))
